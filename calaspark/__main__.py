@@ -116,8 +116,10 @@ def main(argv: list[str] | None = None) -> int:
 
             res = split_clean(spark, args.tsv, list(SCHEMAS[args.table]))
             write_clean_csv(res.good, f"{args.out_dir}/{args.table}.clean")
-            write_quarantine(res.quarantine, f"{args.out_dir}/{args.table}.errors")
-            print(f"good={res.good.count()} quarantined={res.quarantine.count()}")
+            n_bad = write_quarantine(
+                res.quarantine, f"{args.out_dir}/{args.table}.errors"
+            )
+            print(f"good={res.good.count()} quarantined={n_bad}")
         elif args.cmd == "report":
             import os
 

@@ -9,12 +9,17 @@ schema (sidecar ``.errors.csv``), and re-writes a clean CSV. The
 typing step happens at DB load time via per-field SQL templates
 (`calaccess_raw/fields.py §*.copy_template`).
 
-Here the same semantics are ONE distributed pass:
+Here the same semantics are lazy DataFrame plans over one text scan:
 
 - ``spark.read.text`` scans lines in parallel (splittable at 100 TB);
 - cleaning is two ``regexp_replace`` projections (codegen);
-- the good/quarantine split is a field-count predicate — both sides
-  derive from one scan, and Spark reuses the exchange;
+- :func:`flag_lines` yields the ONE cleaned frame that carries each
+  line's tab-field count (``_nf``); the good/quarantine split is a
+  filter on that flag, so both sides derive from the same frame. No
+  shuffle is involved. Each action on an unpersisted side re-scans
+  the text, so a caller that writes both sides persists the flagged
+  frame first (``orchestrator.update`` does: the good-row write is its
+  only text scan, and the quarantine write reads the persisted frame);
 - typing is a per-column expression from the declarative schema kind
   (``try_``-casts: invalid values become NULL, never a job failure —
   the reference's COPY templates behave the same);
@@ -51,15 +56,18 @@ _ENC_TO = "''\"\"-- "  # positional map; BOM past the end → deleted
 class CleanResult:
     """Outcome of one clean pass (the reference's per-file log row).
 
-    ``body`` is the cleaned non-header line frame BEFORE the
-    good/quarantine split — the V1 verifier counts it independently,
-    so ``|good| + |quarantine| == |body|`` is a real accounting check
-    (not derivable from the other two counts).
+    ``flagged`` is the cleaned non-header line frame with its
+    tab-field count ``_nf``; ``good`` and ``quarantine`` are filters
+    of it. ``body`` is the same lines BEFORE the good/quarantine split
+    — the V1 verifier counts it independently, so ``|good| +
+    |quarantine| == |body|`` is a real accounting check (not derivable
+    from the other two counts).
     """
 
     good: DataFrame
     quarantine: DataFrame
     body: DataFrame
+    flagged: DataFrame
 
 
 def read_lines(spark: SparkSession, path: str) -> DataFrame:
@@ -76,31 +84,42 @@ def clean_line(col: str | Column = "value") -> Column:
     return F.regexp_replace(F.regexp_replace(c, r"\r$", ""), _CTRL_RE, "")
 
 
-def split_clean(
-    spark: SparkSession, path: str, columns: list[str]
-) -> CleanResult:
-    """Clean lines and split into typed-ready good rows vs quarantine.
-
-    A row is GOOD iff its tab-field count equals ``len(columns)``
-    (the reference's csvkit field-count rule, C1). Header lines are
-    recognized by exact match against the schema-declared header —
-    the only driver-side literal; works across many input files.
-
-    Quarantine rows keep the raw line plus diagnostics (field count,
-    reason) — the ``.errors.csv`` sidecar twin.
-    """
-    n = len(columns)
-    header = "\t".join(columns)
-    lines = read_lines(spark, path).select(clean_line("value").alias("line"))
-    body = lines.filter(F.col("line") != header)
+def _fields() -> Column:
     # limit=-1 keeps trailing empty fields — a row ending in tabs has
     # the right arity for the count check.
-    fields = F.split("line", "\t", -1)
-    body = body.withColumn("_nf", F.size(fields))
-    good = body.filter(F.col("_nf") == n).select(
+    return F.split("line", "\t", -1)
+
+
+def flag_lines(spark: SparkSession, path: str, columns: list[str]) -> DataFrame:
+    """The cleaned non-header lines of ``path`` as ``(line, _nf)``,
+    ``_nf`` being each line's tab-field count (C1's flag).
+
+    Header lines are recognized by exact match against the
+    schema-declared header — the only driver-side literal; works
+    across many input files.
+    """
+    header = "\t".join(columns)
+    lines = read_lines(spark, path).select(clean_line("value").alias("line"))
+    return lines.filter(F.col("line") != header).withColumn(
+        "_nf", F.size(_fields())
+    )
+
+
+def split_flagged(flagged: DataFrame, columns: list[str]) -> CleanResult:
+    """Split a :func:`flag_lines` frame into typed-ready good rows vs
+    quarantine.
+
+    A row is GOOD iff its tab-field count equals ``len(columns)``
+    (the reference's csvkit field-count rule, C1). Quarantine rows
+    keep the raw line plus diagnostics (field count, reason) — the
+    ``.errors.csv`` sidecar twin.
+    """
+    n = len(columns)
+    fields = _fields()
+    good = flagged.filter(F.col("_nf") == n).select(
         *[fields.getItem(i).alias(c) for i, c in enumerate(columns)]
     )
-    quarantine = body.filter(F.col("_nf") != n).select(
+    quarantine = flagged.filter(F.col("_nf") != n).select(
         F.col("line").alias("raw_line"),
         F.col("_nf").alias("n_fields"),
         F.lit(n).alias("n_expected"),
@@ -109,8 +128,19 @@ def split_clean(
         ).alias("reason"),
     )
     return CleanResult(
-        good=good, quarantine=quarantine, body=body.select("line")
+        good=good,
+        quarantine=quarantine,
+        body=flagged.select("line"),
+        flagged=flagged,
     )
+
+
+def split_clean(
+    spark: SparkSession, path: str, columns: list[str]
+) -> CleanResult:
+    """Clean the lines of ``path`` and split them into typed-ready good
+    rows vs quarantine (:func:`flag_lines` then :func:`split_flagged`)."""
+    return split_flagged(flag_lines(spark, path, columns), columns)
 
 
 # ---------------------------------------------------------------- typing

@@ -35,7 +35,27 @@ from pyspark.sql import DataFrame, SparkSession
 
 @dataclass
 class FileRecord:
-    """RawDataFile twin: one raw input file's lifecycle."""
+    """RawDataFile twin: one raw input file's lifecycle.
+
+    Clean and load share one pass: the staged write of the typed good
+    rows is the only scan of the raw TSV, and it cleans, types and
+    writes in the same tasks. The phase timestamps (epoch seconds)
+    mark:
+
+    - ``clean_start``: the file's processing begins;
+    - ``clean_finish``: that fused scan-clean-write has ended — the
+      raw TSV is not read again;
+    - ``load_start``: equal to ``clean_finish``; the load phase is
+      what follows the scan: the write-audit-publish read-back and
+      renames, and the quarantine sidecar written from the persisted
+      cleaned frame;
+    - ``load_finish``: the sidecar is written and every count is in,
+      just before the V1 check.
+
+    ``extra["phases"]`` holds the seconds of each step: ``wap_write_s``,
+    ``wap_audit_s``, ``wap_publish_s`` and ``quarantine_write_s`` (0
+    when no row was quarantined).
+    """
 
     file_name: str
     size_bytes: int = 0

@@ -17,11 +17,14 @@ extract step leaves them.
 from __future__ import annotations
 
 import os
+import time
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+import pyspark.sql.functions as F
+from pyspark import StorageLevel
+from pyspark.sql import Observation, SparkSession
 
-from .clean import split_clean, type_table
+from .clean import flag_lines, split_flagged, type_table
 from .load import (
     archive_raw,
     verify_counts,
@@ -102,26 +105,27 @@ def update(
         rec = man.stamp_source(name, src)
         rec.extra["last_action"] = "processed"
         schema = SCHEMAS[name]
+        cols = list(schema)
+        flagged = None
         try:
             rec.clean_start, rec.status = now(), "pending"
-            res = split_clean(spark, src, list(schema))
-            good = type_table(res.good, schema, table=name)
-            # V1 accounting inputs, each measured INDEPENDENTLY:
-            # body lines from the pre-split cleaned frame, quarantine
-            # from its own side, load count from write_parquet_wap's
-            # pre-publish read-back of the STAGE dir — so good +
-            # quarantine == body is a real gate, not an identity of
-            # derived numbers.
-            rec.n_body_lines = res.body.count()
-            rec.error_count = res.quarantine.count()
-            if rec.error_count:
-                write_quarantine(res.quarantine, str(out / f"{name}.errors"))
-            if keep_files:
-                rec.extra["archive"] = archive_raw(src, str(out / "archive"))
-            rec.clean_finish = now()
-            rec.status = "cleaned"
-
-            rec.load_start = now()
+            # One text scan per file: the cleaned, field-count-flagged
+            # frame stays persisted for this file's life. The WAP write
+            # of the typed good rows is the only action that reads the
+            # TSV (and fills the cache); the quarantine sidecar is
+            # written from the cache.
+            flagged = flag_lines(spark, src, cols).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+            pre = Observation()
+            counted = flagged.observe(
+                pre,
+                F.count(F.lit(1)).alias("body"),
+                F.count_if(F.col("_nf") != len(cols)).alias("bad"),
+            )
+            good = type_table(
+                split_flagged(counted, cols).good, schema, table=name
+            )
             dest = str(out / name)
             # Write-audit-publish (load.write_parquet_wap): the full
             # table lands in a stage dir with the V1 count observed
@@ -131,6 +135,48 @@ def update(
             # the previously published version intact (the
             # reference's transactional-COPY semantics).
             wap = write_parquet_wap(spark, good, dest)
+            # The staged write cleaned, typed and wrote in one pass;
+            # what follows it (audit, publish, sidecar) is the load
+            # phase — see FileRecord for what each timestamp marks.
+            rec.clean_finish = rec.load_start = (
+                now() - wap["audit_s"] - wap["publish_s"]
+            )
+            rec.status = "cleaned"
+            counts = pre.get
+            q_s = 0.0
+            if counts["bad"]:
+                t = time.perf_counter()
+                rec.error_count = write_quarantine(
+                    split_flagged(flagged, cols).quarantine,
+                    str(out / f"{name}.errors"),
+                )
+                q_s = time.perf_counter() - t
+            else:
+                rec.error_count = 0
+            if keep_files:
+                rec.extra["archive"] = archive_raw(src, str(out / "archive"))
+            rec.extra["phases"] = {
+                "wap_write_s": wap["write_s"],
+                "wap_audit_s": wap["audit_s"],
+                "wap_publish_s": wap["publish_s"],
+                "quarantine_write_s": q_s,
+            }
+            # V1 accounting: three counts, each measured at its own
+            # plan node, so good + quarantined == body is a real gate,
+            # not an identity of derived numbers:
+            # - body: the `pre` CollectMetrics node right above the
+            #   InMemoryTableScan of the persisted frame, below the
+            #   `_nf == n` Filter, in the WAP write's plan;
+            # - good: write_parquet_observed's CollectMetrics node
+            #   above the typed Project of that Filter (clean_count),
+            #   and the WAP audit's own parquet scan of the stage dir
+            #   (load_count);
+            # - quarantined: write_quarantine's CollectMetrics node
+            #   above the `_nf != n` Filter over the InMemoryTableScan,
+            #   in the sidecar write's own job.
+            # `pre`'s bad count only decides whether a sidecar is
+            # written at all.
+            rec.n_body_lines = counts["body"]
             rec.clean_count = wap["observed"]
             rec.load_count = wap["audited"]
             rec.load_finish = now()
@@ -167,6 +213,8 @@ def update(
             rec.extra["error"] = repr(e)
             raise
         finally:
+            if flagged is not None:
+                flagged.unpersist()
             man.save()
 
     man.version_meta["last_update_finish"] = now()

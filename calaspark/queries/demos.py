@@ -694,8 +694,13 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         sim = _dot_probe("e", qu) / F.when(
             F.col("nrm") == 0.0, F.lit(1.0)
         ).otherwise(F.col("nrm"))
+        # ranked like the per-cell branch below (4-digit rounded sim,
+        # then vec_id), so a near-tie at rank 10 resolves the same way
+        # on both sides of the nprobe=16 exactness gate
         exact_branches.append(
-            e.select(F.lit(probe).alias("probe"), "vec_id", sim.alias("sim"))
+            e.select(
+                F.lit(probe).alias("probe"), "vec_id", F.round(sim, 4).alias("sim")
+            )
             .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
             .limit(10)
         )

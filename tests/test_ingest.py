@@ -101,7 +101,13 @@ def test_orchestrator_idempotent_and_resumable(spark, dirty_tsv, tmp_path):
     assert rec.load_count == dirty_tsv["n_good"]
     assert rec.error_count == dirty_tsv["n_bad"]
     assert rec.extra["last_action"] == "processed"
-    assert rec.clean_start <= rec.clean_finish <= rec.load_finish
+    assert rec.clean_start <= rec.clean_finish <= rec.load_start <= rec.load_finish
+    phases = rec.extra["phases"]
+    assert set(phases) == {
+        "wap_write_s", "wap_audit_s", "wap_publish_s", "quarantine_write_s"
+    }
+    assert all(v >= 0 for v in phases.values())
+    assert phases["quarantine_write_s"] > 0  # the fixture has bad rows
 
     # loaded artifact is typed parquet
     lk = spark.read.parquet(str(out / "RCPT_CD"))
@@ -203,6 +209,95 @@ def test_wap_sink_partial_failure_never_torn(
     monkeypatch.undo()
     assert spark.read.parquet(dest).count() == v1
     assert not Path(dest + "__stage").exists()
+
+
+def test_update_v1_catches_quarantine_write_loss(
+    spark, dirty_tsv, tmp_path, monkeypatch
+):
+    """V1 is a three-way check: the quarantined count is the row count
+    the sidecar write observed, not the pre-split flag count, so a
+    quarantine writer that drops one row must fail the update."""
+    import pytest
+
+    import calaspark.ingest.orchestrator as orch_mod
+
+    real = orch_mod.write_quarantine
+
+    def dropping(df, path):  # loses the fixture's short row
+        return real(df.filter(F.col("n_fields") != 3), path)
+
+    monkeypatch.setattr(orch_mod, "write_quarantine", dropping)
+    out = tmp_path / "lake"
+    with pytest.raises(RuntimeError, match="count mismatch"):
+        update(spark, dirty_tsv["raw_dir"], str(out))
+    rec = Manifest(out / "manifest.json").files["RCPT_CD"]
+    assert rec.status == "failed"
+    assert rec.n_body_lines == dirty_tsv["n_good"] + dirty_tsv["n_bad"]
+    assert rec.error_count == dirty_tsv["n_bad"] - 1
+
+
+def _assert_released(spark, dirty_tsv, held: set) -> None:
+    from pyspark import StorageLevel
+
+    from calaspark.ingest.clean import flag_lines
+
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == held
+    flagged = flag_lines(spark, dirty_tsv["path"], list(RCPT_CD))
+    assert flagged.storageLevel == StorageLevel.NONE  # not in the cache
+
+
+def test_update_releases_persisted_frame(
+    spark, dirty_tsv, tmp_path, monkeypatch
+):
+    """A long-lived session must not grow executor storage: the
+    per-file persisted frame is released after a successful update
+    and after one that fails mid-file. Persisted RDDs are compared with
+    those held before the call, since other tests of this session may
+    hold their own."""
+    import pytest
+
+    import calaspark.ingest.orchestrator as orch_mod
+
+    held = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    update(spark, dirty_tsv["raw_dir"], str(tmp_path / "ok"), force=True)
+    _assert_released(spark, dirty_tsv, held)
+
+    def dying(df, path):
+        raise RuntimeError("simulated sidecar crash")
+
+    monkeypatch.setattr(orch_mod, "write_quarantine", dying)
+    with pytest.raises(RuntimeError, match="simulated sidecar crash"):
+        update(spark, dirty_tsv["raw_dir"], str(tmp_path / "crash"), force=True)
+    _assert_released(spark, dirty_tsv, held)
+
+
+def test_update_scans_each_tsv_once(spark, dirty_tsv, tmp_path, monkeypatch):
+    """The WAP write is the only action that reads the raw TSV: the
+    quarantine sidecar comes from the persisted frame, so it is written
+    in full even with the TSV moved away."""
+    from pathlib import Path
+
+    import calaspark.ingest.orchestrator as orch_mod
+
+    src = Path(dirty_tsv["path"])
+    away = src.with_suffix(".moved")
+    real = orch_mod.write_quarantine
+
+    def with_tsv_gone(df, path):
+        src.rename(away)
+        try:
+            return real(df, path)
+        finally:
+            away.rename(src)
+
+    monkeypatch.setattr(orch_mod, "write_quarantine", with_tsv_gone)
+    out = tmp_path / "lake"
+    man = update(spark, dirty_tsv["raw_dir"], str(out))
+    rec = man.files["RCPT_CD"]
+    assert rec.status == "loaded"
+    assert rec.error_count == dirty_tsv["n_bad"]
+    sidecar = spark.read.option("header", "true").csv(str(out / "RCPT_CD.errors"))
+    assert sidecar.count() == dirty_tsv["n_bad"]
 
 
 def test_acquire_zip_end_to_end(spark, dirty_tsv, tmp_path):
@@ -518,6 +613,9 @@ def test_orchestrator_compacts_small_file_loads(spark, tmp_path):
     assert stats["files_before"] >= 4
     assert stats["files_after"] < stats["files_before"]
     assert stats["rows"] == rec.load_count == 4000
+    # no bad rows: no quarantine count and no sidecar
+    assert rec.error_count == 0
+    assert not (out / "RCPT_CD.errors").exists()
 
     # the compacted table still reads whole and typed
     back = spark.read.parquet(str(out / "RCPT_CD"))

@@ -1394,6 +1394,55 @@ def test_ann_recall_gates_at_sf001(spark):
             assert r["recall_at_10"] >= 8, dict(r.asDict())
 
 
+def test_ann_recall_exactness_gate_survives_rank10_near_tie(spark, tmp_path):
+    """ann_recall's nprobe=16 gate compares the exact top-10 with the
+    merge of per-cell top-10s. Both rank by similarity rounded to 4
+    digits, then vec_id; this corpus has two vectors at rank 10 whose
+    similarities differ only after the 4th digit, in the opposite order
+    to their ids, so ranking either side unrounded fails the gate."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from calaspark.queries.demos import ann_recall
+
+    rng = np.random.default_rng(7)
+    n, dim = 300, 64
+    q = rng.standard_normal(dim)
+    q /= np.linalg.norm(q)
+    sims = rng.uniform(-0.3, 0.3, n)
+    sims[0] = 1.0  # the probe
+    sims[1:9] = np.linspace(0.9, 0.83, 8)
+    sims[20], sims[30] = 0.50002, 0.50004  # rank-10 near tie
+    x = np.empty((n, dim))
+    for i, s in enumerate(sims):
+        u = rng.standard_normal(dim)
+        u -= (u @ q) * q
+        x[i] = s * q + np.sqrt(1.0 - s * s) * u / np.linalg.norm(u)
+    x32 = x.astype(np.float32)
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(np.arange(n, dtype=np.int64)),
+            "embedding": pa.array(list(x32), pa.list_(pa.float32())),
+            "label": pa.array(np.zeros(n, dtype=np.int32)),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+
+    # the premise, on the stored float32 values: unrounded ranking puts
+    # id 30 at rank 10, rounded-then-id ranking puts id 20 there
+    v = x32.astype(np.float64)
+    q64 = v[0] / np.linalg.norm(v[0])
+    got = v @ q64 / np.linalg.norm(v, axis=1)
+    raw = sorted(range(n), key=lambda i: (-got[i], i))[:10]
+    rounded = sorted(range(n), key=lambda i: (-round(got[i], 4), i))[:10]
+    assert raw[9] == 30 and rounded[9] == 20
+
+    rows = ann_recall(spark, str(tmp_path)).collect()
+    full = [r for r in rows if r["method"] == "ivf" and r["nprobe"] == 16]
+    assert full and all(r["recall_at_10"] == 10 for r in full)
+
+
 def test_bpe_train_hand_checked(spark):
     """ops/bpe.bpe_train reproduces the textbook BPE merge sequence
     on a hand-computable corpus, including greedy left-to-right
