@@ -24,8 +24,10 @@ table is the multi-writer / SQL-queryable source of truth.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
+import threading
 import time
 from dataclasses import asdict, dataclass, field
 from pathlib import Path
@@ -73,12 +75,19 @@ class FileRecord:
 
 
 class Manifest:
-    """RawDataVersion twin: a keyed collection of FileRecords."""
+    """RawDataVersion twin: a keyed collection of FileRecords.
+
+    Safe to share between threads that each process their own files:
+    a worker edits a private record from :meth:`stamp_source` and
+    publishes it with :meth:`commit`, so :meth:`save` never reads a
+    record that another thread is changing.
+    """
 
     def __init__(self, path: str | os.PathLike):
         self.path = Path(path)
         self.files: dict[str, FileRecord] = {}
         self.version_meta: dict = {}
+        self._lock = threading.Lock()
         if self.path.exists():
             raw = json.loads(self.path.read_text())
             self.version_meta = raw.get("version", {})
@@ -87,6 +96,10 @@ class Manifest:
             }
 
     def save(self) -> None:
+        with self._lock:
+            self._write()
+
+    def _write(self) -> None:
         tmp = self.path.with_suffix(".tmp")
         tmp.write_text(
             json.dumps(
@@ -114,10 +127,21 @@ class Manifest:
         return rec.size_bytes == st.st_size and rec.mtime_ns == st.st_mtime_ns
 
     def stamp_source(self, file_name: str, src_path: str) -> FileRecord:
-        rec = self.record(file_name)
+        """A private copy of ``file_name``'s record (a new one if it has
+        none), stamped with ``src_path``'s size and mtime. The manifest
+        keeps its prior record until :meth:`commit`."""
         st = os.stat(src_path)
+        with self._lock:
+            prior = self.files.get(file_name)
+            rec = copy.deepcopy(prior) if prior else FileRecord(file_name)
         rec.size_bytes, rec.mtime_ns = st.st_size, st.st_mtime_ns
         return rec
+
+    def commit(self, rec: FileRecord) -> None:
+        """Store a copy of ``rec`` as its file's record and save."""
+        with self._lock:
+            self.files[rec.file_name] = copy.deepcopy(rec)
+            self._write()
 
     # ---------------------------------------------- lake table form
 

@@ -68,51 +68,6 @@ def with_rotated_dups(
     )
 
 
-def triangle_block_pairs(
-    df: DataFrame, id_col: str, n_buckets: int = 8
-) -> DataFrame:
-    """All unordered pairs of ``df`` rows, each exactly once, as a
-    joined frame aliased ``a`` / ``b`` (select with ``F.col("a.x")``
-    / ``F.col("b.x")``). ``id_col`` must be unique; pair orientation
-    within same-bucket groups follows id order, cross-bucket
-    orientation follows bucket order — callers wanting a canonical
-    (lo, hi) id pair use ``least``/``greatest``.
-    """
-    # Explicit user repartition on the group key (round-17, guide
-    # §2.5): the bucketed rows are tiny, so AQE's byte-based
-    # coalescing would collapse the quadratic compare stage onto one
-    # task (measured on q33's twin of this plan: one 3.15 s task while
-    # 31 cores idled). User-specified partitioning is never coalesced;
-    # 4× the group count spreads groups nearly collision-free.
-    n_parts = 4 * (n_buckets * (n_buckets + 1) // 2)
-    bucketed = df.withColumn(
-        "_bkt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
-    )
-    a = (
-        bucketed.withColumn(
-            "_pj", F.explode(F.sequence(F.col("_bkt"), F.lit(n_buckets - 1)))
-        )
-        .withColumnRenamed("_bkt", "_pi")
-        .repartition(n_parts, "_pi", "_pj")
-        .alias("a")
-    )
-    b = (
-        bucketed.withColumn(
-            "_pi", F.explode(F.sequence(F.lit(0), F.col("_bkt")))
-        )
-        .withColumnRenamed("_bkt", "_pj")
-        .repartition(n_parts, "_pi", "_pj")
-        .alias("b")
-    )
-    return a.join(
-        b,
-        (F.col("a._pi") == F.col("b._pi")) & (F.col("a._pj") == F.col("b._pj")),
-    ).filter(
-        (F.col("a._pi") < F.col("a._pj"))
-        | (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    )
-
-
 def auto_block_dims(n: int, base: int = 3, cap: int = 6) -> int:
     """Density-adaptive grid dimensionality for
     :func:`grid_cosine_pairs`: one extra blocked dimension per ~64x

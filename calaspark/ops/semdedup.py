@@ -34,14 +34,6 @@ from pyspark.sql import DataFrame
 from .components import dedup_clusters
 
 
-def _dot(x, y):
-    return F.aggregate(
-        F.zip_with(x, y, lambda p, q: p * q),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def semdedup_pairs(
     inv: DataFrame,
     threshold: float = 0.95,

@@ -91,12 +91,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    from . import TABLES
-
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def spread(df: DataFrame) -> DataFrame:
     """Round-robin rebalance to full parallelism BEFORE a CPU-heavy
     per-row projection (tokenize/shingle/hash-fold).

@@ -210,6 +210,19 @@ def test_wap_sink_partial_failure_never_torn(
     assert spark.read.parquet(dest).count() == v1
     assert not Path(dest + "__stage").exists()
 
+    # A file failing mid-pool tears no table: the files that finished
+    # and the failing one (it published before its sidecar crashed)
+    # hold their new 4-row version, the never-started ones their prior
+    # 3-row version, and no stage or retired dir is left behind.
+    st = _fail_mid_pool(spark, tmp_path / "pool", monkeypatch)
+    for name in st["names"]:
+        rows = 3 if name in st["never"] else 4
+        assert spark.read.parquet(str(st["out"] / name)).count() == rows, name
+    assert not [
+        p for p in st["out"].iterdir()
+        if p.name.endswith(("__stage", "__retired"))
+    ]
+
 
 def test_update_v1_catches_quarantine_write_loss(
     spark, dirty_tsv, tmp_path, monkeypatch
@@ -246,6 +259,58 @@ def _assert_released(spark, dirty_tsv, held: set) -> None:
     assert flagged.storageLevel == StorageLevel.NONE  # not in the cache
 
 
+def _fail_mid_pool(spark, base, monkeypatch) -> dict:
+    """Load one file per task slot plus two, rewrite each with one more
+    good row, then update again with the first file's quarantine sidecar
+    raising. The rest of the first wave waits in its sidecar write until
+    that failure, so the last two files never start."""
+    import threading
+
+    import pytest
+
+    import calaspark.ingest.orchestrator as orch_mod
+    from calaspark.ingest.schemas import SCHEMAS
+
+    slots = spark.sparkContext.defaultParallelism
+    names = sorted(SCHEMAS)[: slots + 2]
+    assert len(names) == slots + 2
+    raw, out = base / "raw", base / "lake"
+    raw.mkdir(parents=True)
+    for name in names:
+        _write_schema_tsv(raw, name)
+    update(spark, str(raw), str(out))
+    prior = Manifest(out / "manifest.json").files
+    for name in names:
+        _write_schema_tsv(raw, name, n_good=3)
+
+    bad, failed = names[0], threading.Event()
+    real_process, real_write = orch_mod._process_file, orch_mod.write_quarantine
+
+    def process(*args):
+        try:
+            real_process(*args)
+        except RuntimeError:
+            failed.set()
+            raise
+
+    def write_quarantine(df, path):
+        if path.endswith(f"{bad}.errors"):
+            raise RuntimeError(f"simulated sidecar crash in {bad}")
+        failed.wait(120)
+        return real_write(df, path)
+
+    monkeypatch.setattr(orch_mod, "_process_file", process)
+    monkeypatch.setattr(orch_mod, "write_quarantine", write_quarantine)
+    with pytest.raises(RuntimeError, match=f"simulated sidecar crash in {bad}"):
+        update(spark, str(raw), str(out))
+    monkeypatch.setattr(orch_mod, "_process_file", real_process)
+    monkeypatch.setattr(orch_mod, "write_quarantine", real_write)
+    return {
+        "names": names, "bad": bad, "finished": names[1:slots],
+        "never": names[slots:], "prior": prior, "raw": raw, "out": out,
+    }
+
+
 def test_update_releases_persisted_frame(
     spark, dirty_tsv, tmp_path, monkeypatch
 ):
@@ -269,6 +334,40 @@ def test_update_releases_persisted_frame(
     with pytest.raises(RuntimeError, match="simulated sidecar crash"):
         update(spark, dirty_tsv["raw_dir"], str(tmp_path / "crash"), force=True)
     _assert_released(spark, dirty_tsv, held)
+    monkeypatch.undo()
+
+    # One file fails mid-pool: the files that finished are loaded, the
+    # files that never started keep their prior records exactly (so
+    # their changed sources are not taken as current), and no frame
+    # stays persisted.
+    st = _fail_mid_pool(spark, tmp_path / "pool", monkeypatch)
+    _assert_released(spark, dirty_tsv, held)
+    raw, out = st["raw"], st["out"]
+    man = Manifest(out / "manifest.json")
+    assert man.files[st["bad"]].status == "failed"
+    assert "simulated sidecar crash" in man.files[st["bad"]].extra["error"]
+    for name in st["finished"]:
+        rec = man.files[name]
+        assert rec.status == "loaded", name
+        assert (rec.load_count, rec.error_count) == (4, 1), name
+        assert man.is_current(name, str(raw / f"{name}.TSV")), name
+    for name in st["never"]:
+        assert man.files[name] == st["prior"][name], name
+        assert not man.is_current(name, str(raw / f"{name}.TSV")), name
+
+    # The resume with the fault gone processes only the failed and the
+    # never-started files.
+    man2 = update(spark, str(raw), str(out))
+    _assert_released(spark, dirty_tsv, held)
+    assert list(man2.files) == st["names"]  # discover order
+    for name in st["names"]:
+        rec = man2.files[name]
+        assert rec.status == "loaded", name
+        assert rec.load_count == 4, name
+        assert rec.extra["last_action"] == (
+            "skipped_unchanged" if name in st["finished"] else "processed"
+        ), name
+    assert Manifest(out / "manifest.json").files == man2.files
 
 
 def test_update_scans_each_tsv_once(spark, dirty_tsv, tmp_path, monkeypatch):
@@ -298,6 +397,86 @@ def test_update_scans_each_tsv_once(spark, dirty_tsv, tmp_path, monkeypatch):
     assert rec.error_count == dirty_tsv["n_bad"]
     sidecar = spark.read.option("header", "true").csv(str(out / "RCPT_CD.errors"))
     assert sidecar.count() == dirty_tsv["n_bad"]
+
+
+def test_update_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """The per-file workers inherit the caller's job group: every job of
+    a multi-file update is in it, and none runs without a group."""
+    from calaspark.ingest.schemas import SCHEMAS
+
+    sc = spark.sparkContext
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    names = sorted(SCHEMAS)[:3]
+    for name in names:
+        _write_schema_tsv(raw, name)
+
+    def job_ids(group):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    ungrouped = job_ids(None)
+    sc.setJobGroup("test-update-group", "update")
+    try:
+        update(spark, str(raw), str(tmp_path / "lake"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(job_ids("test-update-group")) >= len(names)
+    assert job_ids(None) - ungrouped == set()
+
+
+def test_update_with_pinned_threads_off(
+    spark, dirty_tsv, tmp_path, monkeypatch
+):
+    """With PySpark's pinned thread mode off, ``inheritable_thread_target``
+    returns the session unwrapped; ``update`` must still run."""
+    import calaspark.ingest.orchestrator as orch_mod
+
+    monkeypatch.setattr(orch_mod, "inheritable_thread_target", lambda s: s)
+    man = update(spark, dirty_tsv["raw_dir"], str(tmp_path / "lake"))
+    assert man.files["RCPT_CD"].status == "loaded"
+
+
+def test_manifest_commits_from_many_threads(tmp_path):
+    """A stamped record is private until committed, and the manifest
+    keeps a copy of what was committed; records committed from many
+    threads at once are all saved whole."""
+    import sys
+    import threading
+
+    man = Manifest(tmp_path / "manifest.json")
+    src = tmp_path / "SRC.TSV"
+    src.write_text("x\n")
+    rec = man.stamp_source("PRIVATE", str(src))
+    rec.extra["k"] = 1
+    assert "PRIVATE" not in man.files
+    man.commit(rec)
+    rec.extra["k"] = 2
+    assert man.files["PRIVATE"].extra == {"k": 1}
+
+    names = [f"F{i:02d}" for i in range(64)]
+
+    def work(name):
+        rec = man.stamp_source(name, str(src))
+        for i in range(8):
+            rec.extra[f"k{i}"] = i
+            man.commit(rec)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(n,)) for n in names]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    back = Manifest(tmp_path / "manifest.json").files
+    assert sorted(back) == [*names, "PRIVATE"]
+    assert all(len(back[n].extra) == 8 for n in names)
 
 
 def test_acquire_zip_end_to_end(spark, dirty_tsv, tmp_path):
@@ -407,6 +586,22 @@ _BAD_VAL = {
 }
 
 
+
+def _write_schema_tsv(raw_dir, name: str, n_good: int = 2) -> None:
+    """``name``.TSV in ``raw_dir``: ``n_good`` good rows, one row whose
+    non-string fields type to NULL, and one quarantined row."""
+    from calaspark.ingest.schemas import SCHEMAS
+
+    schema = SCHEMAS[name]
+    kinds = list(schema.values())
+    good = "\t".join(_GOOD_VAL[k] for k in kinds)
+    dirty = "\t".join(_BAD_VAL.get(k, _GOOD_VAL[k]) for k in kinds)
+    # one field too many for ANY schema → quarantine
+    long_row = "\t".join(["X"] * (len(schema) + 1))
+    lines = ["\t".join(schema), *[good] * n_good, dirty, long_row]
+    (raw_dir / f"{name}.TSV").write_text("\n".join(lines) + "\n")
+
+
 def test_registry_completeness_golden():
     """The reference enforces that every model is documented and every
     field annotated (models/base.py tests, SURVEY §5.1) — same golden
@@ -474,16 +669,8 @@ def test_orchestrator_multi_schema_e2e(spark, tmp_path):
 
     raw_dir = tmp_path / "raw"
     raw_dir.mkdir()
-    for name, schema in SCHEMAS.items():
-        kinds = list(schema.values())
-        header = "\t".join(schema)
-        good = "\t".join(_GOOD_VAL[k] for k in kinds)
-        dirty = "\t".join(_BAD_VAL.get(k, _GOOD_VAL[k]) for k in kinds)
-        # one field too many for ANY schema → quarantine
-        long_row = "\t".join(["X"] * (len(schema) + 1))
-        (raw_dir / f"{name}.TSV").write_text(
-            "\n".join([header, good, good, dirty, long_row]) + "\n"
-        )
+    for name in SCHEMAS:
+        _write_schema_tsv(raw_dir, name)
 
     out = tmp_path / "lake"
     man = update(spark, str(raw_dir), str(out))
