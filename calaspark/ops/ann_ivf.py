@@ -206,15 +206,6 @@ def load_ivf_index(
     return IvfIndex(cents, f"{path}/invfile", id_col, vec_col)
 
 
-#: In-process handle cache: centroids are model state (k × dim
-#: floats), and the index path is keyed by corpus mtime + params
-#: (see demos._ivf_index_path), so a cached handle can never go
-#: stale without its key changing; the leading applicationId guards
-#: against handles outliving their SparkSession. Saves one
-#: centroid-parquet read job per repeated probe in the same driver.
-_INDEX_HANDLES: dict[tuple[str, str, str, str], IvfIndex] = {}
-
-
 def load_or_build_ivf_index(
     emb: DataFrame,
     path: str,
@@ -226,28 +217,25 @@ def load_or_build_ivf_index(
     """Load the index at ``path`` if present, else build it there.
     Presence = the parquet ``_SUCCESS`` markers of both halves (a
     half-written index from a killed build is rebuilt, not trusted).
-    Handles are memoized per (session, path, id_col, vec_col) — the
-    path embeds the corpus mtime and quantizer params, so cache
-    entries self-invalidate with the data, and the applicationId in
-    the key means a stopped-and-recreated SparkSession in the same
-    process (multi-session tests, long-lived services) can never be
-    handed a handle bound to the dead session."""
-    key = (emb.sparkSession.sparkContext.applicationId, path, id_col, vec_col)
-    cached = _INDEX_HANDLES.get(key)
-    if cached is not None:
-        return cached
-    from .materialize import evict_dead_sessions
+    Handles are session-memoized (the centroids are model state), which
+    saves one centroid-parquet read job per repeated probe."""
+    from ..memo import session_memo
 
-    evict_dead_sessions(_INDEX_HANDLES, key[0])
-    ok = all(
-        Path(path, part, "_SUCCESS").exists() for part in ("centroids", "invfile")
+    def build() -> IvfIndex:
+        ok = all(
+            Path(path, part, "_SUCCESS").exists()
+            for part in ("centroids", "invfile")
+        )
+        if ok:
+            return load_ivf_index(emb.sparkSession, path, id_col, vec_col)
+        return build_ivf_index(emb, path, n_cells, iters, id_col, vec_col)
+
+    return session_memo(
+        emb.sparkSession,
+        "ann_ivf.index",
+        (path, n_cells, iters, id_col, vec_col),
+        build,
     )
-    if ok:
-        idx = load_ivf_index(emb.sparkSession, path, id_col, vec_col)
-    else:
-        idx = build_ivf_index(emb, path, n_cells, iters, id_col, vec_col)
-    _INDEX_HANDLES[key] = idx
-    return idx
 
 
 def ivf_probe(

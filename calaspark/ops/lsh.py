@@ -32,6 +32,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..memo import session_memo
 from .materialize import materialize
 
 _I64_MAX = (1 << 63) - 1
@@ -93,22 +94,12 @@ def _cosine(a: Column, b: Column) -> Column:
 # ------------------------------------------------- bitmask encoding
 
 
-#: Memoized (applicationId, caller dictionary key) → (materialized
-#: token→bit dictionary | None, n_vocab, n_words). The dictionary is
-#: corpus-level MODEL state (the round-12 BPE-dictionary-memo
-#: precedent): a token→bit assignment, not query results. Memoizing
-#: it saves, per build after the first, the vocabulary-count job AND
-#: the explode+distinct+window recomputation inside the encode
-#: checkpoint (~0.5 s each measured for the word-token callers).
-_BITMASK_DICTS: dict[tuple, tuple] = {}
-
-
 def bitmask_encode(
     t: DataFrame,
     id_col: str = "doc_id",
     tokens_col: str = "toks",
     max_vocab: int = 512,
-    dict_key: str | None = None,
+    dict_key: tuple[str, tuple[str, ...]] | None = None,
 ) -> tuple[DataFrame, int] | None:
     """Dictionary-encode token sets to fixed-width bitmasks.
 
@@ -122,41 +113,37 @@ def bitmask_encode(
     fall back to ``array_intersect``. The vocabulary count is one
     tiny Spark job at plan time.
 
-    ``dict_key``: session-memo key for the dictionary (pass a
-    corpus-identity string — path+mtime — when ``t``'s token
-    VOCABULARY is a deterministic function of a corpus snapshot).
-    Any consistent token→bit assignment yields identical
-    intersection counts, and a dictionary over a vocabulary superset
-    is exact too (absent tokens never set bits), so callers whose
-    inputs share a vocabulary may share a key.
+    ``dict_key``: ``(name, source paths)`` naming ``t``'s token
+    VOCABULARY as a function of those sources; the dictionary (model
+    state, not query results) is then session-memoized. Any consistent
+    token→bit assignment yields identical intersection counts, and a
+    dictionary over a vocabulary superset is exact too (absent tokens
+    never set bits), so callers whose inputs share a vocabulary may
+    share a key.
     """
-    memo_key = None
-    if dict_key is not None:
-        memo_key = (t.sparkSession.sparkContext.applicationId, dict_key)
-    hit = _BITMASK_DICTS.get(memo_key) if memo_key else None
-    if hit is not None:
-        dim, n_vocab, n_words = hit
-        if dim is None:  # remembered too-big verdict
-            return None
-    else:
+    def build() -> tuple:
         terms = t.select(F.explode(tokens_col).alias("tok")).distinct()
         n_vocab = terms.count()
         if n_vocab > max_vocab:
-            if memo_key:
-                _BITMASK_DICTS[memo_key] = (None, n_vocab, 0)
-            return None
-        n_words = max(1, (n_vocab + 63) // 64)
+            return None, 0
         from pyspark.sql import Window
 
         dim = terms.withColumn(
             "bit", F.row_number().over(Window.orderBy("tok")) - 1
         )
-        if memo_key:
-            from .materialize import evict_dead_sessions
-
-            evict_dead_sessions(_BITMASK_DICTS, memo_key[0])
+        if dict_key is not None:
             dim = materialize(dim)
-            _BITMASK_DICTS[memo_key] = (dim, n_vocab, n_words)
+        return dim, max(1, (n_vocab + 63) // 64)
+
+    if dict_key is None:
+        dim, n_words = build()
+    else:
+        name, sources = dict_key
+        dim, n_words = session_memo(
+            t.sparkSession, "lsh.bitmask_dict", (name, max_vocab), build, sources
+        )
+    if dim is None:
+        return None
     enc = (
         # explode_outer + left join keeps empty-set ids (all-zero mask)
         t.select(
@@ -312,7 +299,7 @@ def neardup_pairs_lsh(
     num_hashes: int = 32,
     bands: int = 8,
     use_bitmask: bool = True,
-    dict_key: str | None = None,
+    dict_key: tuple[str, tuple[str, ...]] | None = None,
 ) -> DataFrame:
     """Banded-MinHash candidates, then EXACT Jaccard verification.
 

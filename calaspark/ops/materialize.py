@@ -46,16 +46,3 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 
-
-def evict_dead_sessions(memo: dict, app: str) -> None:
-    """Drop memo entries keyed by a DEAD applicationId (every
-    session-scoped handle memo in this package leads its key with
-    the applicationId): the dead session's SparkContext is gone, the
-    handle is unusable, and its storage died with the context — but
-    the Python reference would pin the JVM-side plan for the process
-    lifetime (round-12 advice on the BPE dictionary memo, applied
-    uniformly). Called on every memo MISS, so the steady-state cost
-    is a dict scan only when something is about to be built anyway.
-    """
-    for k in [k for k in memo if k[0] != app]:
-        del memo[k]

@@ -35,29 +35,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from .materialize import evict_dead_sessions
-
-#: Probe memo (round-11 verdict advisory 2): the broadcast-guard count
-#: below is a plan-time Spark job, so repeated with_rank2 calls over
-#: the SAME bucket-grain plan (bench re-runs, multi-rank queries like
-#: q166's two-column Spearman) paid it once per call. Keyed on
-#: (applicationId, input-files hash, semanticHash of the bucket agg,
-#: limit) — the hash identifies the canonicalized logical plan, and a
-#: (vanishingly unlikely) collision only flips a JOIN-STRATEGY hint,
-#: never semantics, which is why a hash key is acceptable here.
-#: Bounded, and dead-session entries are evicted on every miss
-#: (round-13 advice: without eviction, 256 accumulated dead keys
-#: would permanently disable memoization for new plans — the key
-#: LEADS with applicationId precisely so evict_dead_sessions applies,
-#: like every other session-scoped memo in this package). Round-12
-#: advice: the DATA-VERSION component — applicationId plus a hash of
-#: the plan's concrete input files (driver-side metadata from the
-#: already-listed FileIndex, no job) — means a same-path rewrite
-#: within one process (new part-file names) or a new session cannot
-#: reuse a stale "small" verdict and force F.broadcast() of a
-#: now-large offset table.
-_PROBE_MEMO: dict[tuple, bool] = {}
-_PROBE_MEMO_MAX = 256
+from ..memo import session_memo
 
 
 def _input_files_hash(df: DataFrame) -> int | None:
@@ -118,23 +96,24 @@ def with_rank2(
     )
     off = rows.groupBy(*gcols, "_rk_b").agg(F.count(F.lit(1)).alias("_rk_c"))
     # Plan-time size probe on the bucket-grain agg (pre-window, so the
-    # probe job is a partial-agg count, not a sorted prefix scan),
-    # memoized per canonical plan so repeated calls pay it once.
-    app = df.sparkSession.sparkContext.applicationId
+    # probe job is a partial-agg count, not a sorted prefix scan).
+    # The verdict is model state of the canonical plan: keyed on the
+    # plan's input files and semanticHash, a (vanishingly unlikely)
+    # hash collision only flips a JOIN-STRATEGY hint, never semantics.
+    def probe() -> bool:
+        return off.limit(broadcast_limit + 1).count() <= broadcast_limit
+
     files_h = _input_files_hash(df)
-    memo_key = (
-        None
+    off_small = (
+        probe()
         if files_h is None
-        else (app, files_h, off.semanticHash(), broadcast_limit)
+        else session_memo(
+            df.sparkSession,
+            "rank.broadcast_probe",
+            (files_h, off.semanticHash(), broadcast_limit),
+            probe,
+        )
     )
-    if memo_key is not None and memo_key in _PROBE_MEMO:
-        off_small = _PROBE_MEMO[memo_key]
-    else:
-        off_small = off.limit(broadcast_limit + 1).count() <= broadcast_limit
-        if memo_key is not None:
-            evict_dead_sessions(_PROBE_MEMO, app)
-            if len(_PROBE_MEMO) < _PROBE_MEMO_MAX:
-                _PROBE_MEMO[memo_key] = off_small
     wb = (
         Window.partitionBy(*gcols)
         .orderBy("_rk_b")

@@ -19,7 +19,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..tables import load_table, spread
+from ..memo import session_memo
+from ..tables import load_table, spread, table_path
 from ._util import RATE, dec
 
 
@@ -6987,63 +6988,36 @@ def q186_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------- Q189
 
 
-#: Memoized (applicationId, documents path+mtime) → materialized
-#: encoded dictionary (w, syms, n_tok) under BPE_FIXED_MERGES — the
-#: demos.py corpus-handle lifecycle: bpe_apply_merges persists its
-#: result, so without the memo every q189/bpe_encode_words call
-#: (bench runs each query several times) would stack another cached
-#: dictionary; with it the session encodes each corpus ONCE and the
-#: intermediate persist is released after materialization.
-_BPE_DICT_HANDLES: dict[tuple[str, str], DataFrame] = {}
-
-
 def _bpe_encoded_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct normalized corpus words encoded with the pinned
-    BPE_FIXED_MERGES: (w, syms array<string>, n_tok long)."""
-    from pathlib import Path
-
+    BPE_FIXED_MERGES: (w, syms array<string>, n_tok long). Model
+    state: memoized, each call no longer stacks another cached
+    dictionary."""
     from ..ops.bpe import BPE_FIXED_MERGES, _chars, bpe_apply_merges
     from ..ops.materialize import materialize
     from ..ops.text import tokens
 
-    src = Path(sf_dir) / "documents.parquet"
-    ck = f"{src}|{src.stat().st_mtime_ns if src.exists() else 0}"
-    app = spark.sparkContext.applicationId
-    key = (app, ck)
-    hit = _BPE_DICT_HANDLES.get(key)
-    if hit is not None:
-        return hit
-    # Evict handles that can no longer serve a request (round-12
-    # advice: the dict grew for the process lifetime): entries keyed
-    # by a DEAD applicationId (their SparkContext is gone — the
-    # handle is unusable and its blocks died with the context), and
-    # entries for THIS corpus path under a superseded mtime (a
-    # rewrite makes the old encode stale). Popping the last Python
-    # reference lets py4j release the JVM-side plan and the
-    # ContextCleaner reclaim the checkpoint blocks.
-    for stale in [
-        k
-        for k in _BPE_DICT_HANDLES
-        if k[0] != app or (k != key and k[1].startswith(f"{src}|"))
-    ]:
-        del _BPE_DICT_HANDLES[stale]
-    d = load_table(spark, sf_dir, "documents")
-    dict_df = (
-        d.select(F.explode(tokens("text")).alias("tok"))
-        .select(
-            F.regexp_replace(F.lower("tok"), "[^a-z]", "").alias("w")
+    def build() -> DataFrame:
+        d = load_table(spark, sf_dir, "documents")
+        dict_df = (
+            d.select(F.explode(tokens("text")).alias("tok"))
+            .select(
+                F.regexp_replace(F.lower("tok"), "[^a-z]", "").alias("w")
+            )
+            .filter(F.col("w") != "")
+            .distinct()
+            .select("w", _chars("w").alias("syms"))
         )
-        .filter(F.col("w") != "")
-        .distinct()
-        .select("w", _chars("w").alias("syms"))
+        enc = bpe_apply_merges(dict_df, BPE_FIXED_MERGES)
+        out = materialize(
+            enc.select("w", "syms", F.size("syms").cast("long").alias("n_tok"))
+        )
+        enc.unpersist()
+        return out
+
+    return session_memo(
+        spark, "advanced.bpe_dict", (), build, (table_path(sf_dir, "documents"),)
     )
-    enc = bpe_apply_merges(dict_df, BPE_FIXED_MERGES)
-    out = materialize(
-        enc.select("w", "syms", F.size("syms").cast("long").alias("n_tok"))
-    )
-    enc.unpersist()
-    _BPE_DICT_HANDLES[key] = out
-    return out
 
 
 def q189_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

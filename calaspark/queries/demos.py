@@ -13,12 +13,23 @@ from uuid import uuid4
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..memo import session_memo
 from ..ops.lsh import ann_topk_lsh, neardup_pairs_lsh
 from ..ops.materialize import materialize
 from ..ops.multimodal import as_media_table, extract_features
 from ..ops.text import tokens
 from ..ops.udf_demos import TokenizeUDTF, sigmoid_quality_builtin, sigmoid_quality_pandas
-from ..tables import load_table, spread
+from ..tables import load_table, spread, table_path
+
+
+def _word_token_docs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, tuple]:
+    """(doc_id, toks) word-token sets of the documents corpus, and the
+    bitmask-dictionary key of their vocabulary, which every caller
+    tokenizing through here shares."""
+    docs = spread(load_table(spark, sf_dir, "documents")).select(
+        "doc_id", F.array_distinct(tokens("text", " ")).alias("toks")
+    )
+    return docs, ("wordtok", (table_path(sf_dir, "documents"),))
 
 
 def lsh_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -26,17 +37,8 @@ def lsh_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified (sim ≥ 0.5). Subset of q33's exact output with LSH
     recall; the plan has NO cartesian — candidates come from a
     shuffle join on (band_id, band_hash)."""
-    d = spread(load_table(spark, sf_dir, "documents"))
-    docs = d.select(
-        "doc_id", F.array_distinct(tokens("text", " ")).alias("toks")
-    )
-    # dict_key: the verify bitmask's token→bit dictionary is a
-    # deterministic function of the corpus snapshot — memoized per
-    # session (ops/lsh._BITMASK_DICTS), it saves the vocab-count job
-    # + the dictionary recomputation on every rebuild.
-    return neardup_pairs_lsh(
-        docs, threshold=0.5, dict_key=f"wordtok|{_doc_corpus_key(sf_dir)}"
-    )
+    docs, dict_key = _word_token_docs(spark, sf_dir)
+    return neardup_pairs_lsh(docs, threshold=0.5, dict_key=dict_key)
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,87 +49,43 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _pq_corpus_key(sf_dir: str) -> str:
-    """Corpus identity for the PQ handle cache: path + mtime, so a
-    changed corpus self-invalidates (the _ivf_index_path convention
-    without the on-disk half — PQ state is session-memoized)."""
-    from pathlib import Path as _P
-
-    src = _P(sf_dir) / "embeddings.parquet"
-    return f"{src}|{src.stat().st_mtime_ns if src.exists() else 0}"
-
-
-#: Memoized (applicationId, documents-key) → materialized hashed
-#: 3-shingle table (doc_id, toks array<long>) shared by the two
-#: shingle-grain near-dup families (ngram_neardup, simhash_neardup):
-#: each call used to re-tokenize + re-checkpoint the identical table.
-_SHINGLE_HANDLES: dict[tuple[str, str], DataFrame] = {}
-
-
-def _doc_corpus_key(sf_dir: str) -> str:
-    from pathlib import Path as _P
-
-    src = _P(sf_dir) / "documents.parquet"
-    return f"{src}|{src.stat().st_mtime_ns if src.exists() else 0}"
-
-
 def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # model state: the (doc_id, hashed 3-shingle set) table that
+    # ngram_neardup and simhash_neardup both scan
     from ..ops.text import with_shingle_hashes
 
-    key = (spark.sparkContext.applicationId, _doc_corpus_key(sf_dir))
-    hit = _SHINGLE_HANDLES.get(key)
-    if hit is not None:
-        return hit
-    from ..ops.materialize import evict_dead_sessions
+    def build() -> DataFrame:
+        d = spread(load_table(spark, sf_dir, "documents"))
+        return materialize(
+            with_shingle_hashes(d.select("doc_id", "text"), n=3)
+            .select("doc_id", F.array_distinct("toks").alias("toks"))
+        )
 
-    evict_dead_sessions(_SHINGLE_HANDLES, key[0])
-    d = spread(load_table(spark, sf_dir, "documents"))
-    docs = materialize(
-        with_shingle_hashes(d.select("doc_id", "text"), n=3)
-        .select("doc_id", F.array_distinct("toks").alias("toks"))
+    return session_memo(
+        spark, "demos.shingled_docs", (), build, (table_path(sf_dir, "documents"),)
     )
-    _SHINGLE_HANDLES[key] = docs
-    return docs
-
-
-#: Memoized (applicationId, corpus-key) → materialized typed corpus
-#: (vec_id, e double[], nrm). Every ANN demo and the recall harness
-#: scans this same table; before the memo each CALL re-ran the
-#:  cast+norm projection and a fresh localCheckpoint (~2.5 s/call at
-#: sf0.1 — pure re-materialization of an unchanged 2000-row table).
-#: Same lifecycle as ops/ann_pq._PQ_HANDLES: per session, corpus
-#: mtime self-invalidates via the key.
-_E_HANDLES: dict[tuple[str, str], DataFrame] = {}
-
-#: Memoized (applicationId, corpus-key, probes) → {vec_id: [floats]}
-#: probe vectors for the ANN recall harness — session-scoped harness
-#: state with the _E_HANDLES lifecycle (round-18; saves one collect
-#: job over the checkpointed corpus per ann_recall build).
-_PROBE_HANDLES: dict[tuple, dict] = {}
 
 
 def _corpus_e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _pq_corpus_key(sf_dir))
-    hit = _E_HANDLES.get(key)
-    if hit is not None:
-        return hit
-    from ..ops.materialize import evict_dead_sessions
+    # model state: the typed corpus (vec_id, e double[], nrm) every ANN
+    # demo scans; rebuilding it cost ~2.5 s per call at sf0.1
+    def build() -> DataFrame:
+        emb = spread(load_table(spark, sf_dir, "embeddings"))
+        dot_self = F.aggregate(
+            F.zip_with("e", "e", lambda a, b: a * b),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        return materialize(
+            emb.select(
+                "vec_id",
+                F.transform("embedding", lambda x: x.cast("double")).alias("e"),
+            ).withColumn("nrm", F.sqrt(dot_self))
+        )
 
-    evict_dead_sessions(_E_HANDLES, key[0])
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    dot_self = F.aggregate(
-        F.zip_with("e", "e", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    return session_memo(
+        spark, "demos.corpus_e", (), build, (table_path(sf_dir, "embeddings"),)
     )
-    e = materialize(
-        emb.select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-        ).withColumn("nrm", F.sqrt(dot_self))
-    )
-    _E_HANDLES[key] = e
-    return e
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,7 +101,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ops.ann_pq import load_or_build_pq, pq_topk
 
     e = _corpus_e(spark, sf_dir)
-    model, codes = load_or_build_pq(e, _pq_corpus_key(sf_dir))
+    model, codes = load_or_build_pq(e, table_path(sf_dir, "embeddings"))
     qv = e.filter(F.col("vec_id") == 0).collect()[0]["e"]
     import numpy as _np
 
@@ -161,7 +119,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _corpus_e(spark, sf_dir)
     model, cc, cents = load_or_build_ivfpq(
-        e, _pq_corpus_key(sf_dir), _ivf_index_path(sf_dir)
+        e, table_path(sf_dir, "embeddings"), _ivf_index_path(sf_dir)
     )
     qv = e.filter(F.col("vec_id") == 0).collect()[0]["e"]
     import numpy as _np
@@ -352,13 +310,8 @@ def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation, lineage cut per round) → canonical-survivor
     election. Returns per-cluster sizes; iterative → rows-only."""
     from ..ops.components import connected_components
-    from ..ops.text import tokens
 
-    d = load_table(spark, sf_dir, "documents")
-    docs = spread(d).select(
-        "doc_id", F.array_distinct(tokens("text", " ")).alias("toks")
-    )
-    from ..ops.lsh import neardup_pairs_lsh
+    docs, dict_key = _word_token_docs(spark, sf_dir)
 
     # Stage 1 — EXACT collapse before near-dup (the textbook pipeline
     # order): identical token sets form Jaccard-1 cliques, so feeding
@@ -433,11 +386,7 @@ def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a superset/equal-vocabulary dictionary is exact (see
     # ops/lsh.bitmask_encode).
     pairs = neardup_pairs_lsh(
-        rep_docs,
-        threshold=0.8,
-        num_hashes=32,
-        bands=4,
-        dict_key=f"wordtok|{_doc_corpus_key(sf_dir)}",
+        rep_docs, threshold=0.8, num_hashes=32, bands=4, dict_key=dict_key
     )
 
     # Stage 3 — connected components on the representative graph,
@@ -662,27 +611,17 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact top-10 (per-probe literal dots ranked in a single scan
     # via a probe-tagged union — each branch is its own TakeOrdered
     # over the shared materialized table, still one Spark job).
-    # Round-18: the probe-vector fetch is memoized per (session,
-    # corpus) exactly like the corpus handle itself (_E_HANDLES
-    # lifecycle — applicationId-scoped, corpus-mtime-keyed, dies with
-    # the session): two fixed probe vectors are model-sized harness
-    # state, and re-collecting them cost one full job over the
-    # checkpointed corpus per build (~0.3–0.5 s measured).
-    pkey = (
-        spark.sparkContext.applicationId,
-        _pq_corpus_key(sf_dir),
+    # model-sized harness state: re-collecting the probes cost a job
+    qrows = session_memo(
+        spark,
+        "demos.recall_probes",
         probes,
-    )
-    qrows = _PROBE_HANDLES.get(pkey)
-    if qrows is None:
-        from ..ops.materialize import evict_dead_sessions
-
-        evict_dead_sessions(_PROBE_HANDLES, pkey[0])
-        qrows = {
+        lambda: {
             r["vec_id"]: list(r["e"])
             for r in e.filter(F.col("vec_id").isin(list(probes))).collect()
-        }
-        _PROBE_HANDLES[pkey] = qrows
+        },
+        (table_path(sf_dir, "embeddings"),),
+    )
     # probes absent from the corpus (tiny/filtered tables) are skipped
     # rather than KeyError-ing the whole harness
     probes = tuple(p for p in probes if p in qrows)
@@ -731,9 +670,10 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_topk,
     )
 
-    pq_model, pq_codes = load_or_build_pq(e, _pq_corpus_key(sf_dir))
+    src = table_path(sf_dir, "embeddings")
+    pq_model, pq_codes = load_or_build_pq(e, src)
     ipq_model, ipq_cc, ipq_cents = load_or_build_ivfpq(
-        e, _pq_corpus_key(sf_dir), _ivf_index_path(sf_dir)
+        e, src, _ivf_index_path(sf_dir)
     )
 
     n_cells = 16
@@ -1005,13 +945,6 @@ def pandas_grouped_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.join(zz, "event_type").orderBy("event_type")
 
 
-#: Trained SemDeDup quantizers per (applicationId, sf_dir) — model
-#: state (16 x 64 floats), session-scoped so a stopped/recreated
-#: session can never serve a stale handle (the ann_ivf
-#: _INDEX_HANDLES rule).
-_SEMDEDUP_CENTROIDS: dict = {}
-
-
 def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E17×E18 at scale: SemDeDup (Abbas et al. 2023) — semantic
     dedup that compares embeddings ONLY within k-means cells
@@ -1034,13 +967,9 @@ def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build/probe discipline (repeated pipeline runs over the same
     # snapshot retrain nothing); assignment and verify stay exact
     corpus = with_rotated_dups(e)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cents = _SEMDEDUP_CENTROIDS.get(key)
-    if cents is None:
-        from ..ops.ann_ivf import train_ivf_centroids
-        from ..ops.materialize import evict_dead_sessions, materialize
 
-        evict_dead_sessions(_SEMDEDUP_CENTROIDS, key[0])
+    def train():
+        from ..ops.ann_ivf import train_ivf_centroids
 
         sample = materialize(
             corpus.filter(
@@ -1048,8 +977,15 @@ def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 == 0
             ).select("vec_id", "e")
         )
-        cents = train_ivf_centroids(sample, n_cells=16, iters=2)
-        _SEMDEDUP_CENTROIDS[key] = cents
+        return train_ivf_centroids(sample, n_cells=16, iters=2)
+
+    cents = session_memo(
+        spark,
+        "demos.semdedup_centroids",
+        (16, 2),
+        train,
+        (table_path(sf_dir, "embeddings"),),
+    )
     labeled = semdedup(
         corpus,
         n_cells=16,

@@ -29,7 +29,8 @@ _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
 def _stat_key(path: str) -> tuple:
-    """Freshness key for the session plan memo.
+    """Freshness key of a source path, for the session plan memo here
+    and for calaspark.memo.
 
     Single-file tables change (mtime_ns, size, ino) on rewrite;
     directory tables change the dir mtime on any file create/delete/
@@ -43,6 +44,11 @@ def _stat_key(path: str) -> tuple:
     except OSError:
         return ("missing",)
     return (st.st_mtime_ns, st.st_size, st.st_ino)
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    """Parquet path of testdata table ``name`` under ``sf_dir``."""
+    return f"{sf_dir}/{name}.parquet"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -71,7 +77,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     one load_table result within a query.
     """
     prepare(spark)
-    path = f"{sf_dir}/{name}.parquet"
+    path = table_path(sf_dir, name)
     memo = getattr(spark, "_calaspark_table_memo", None)
     if memo is None:
         memo = {}

@@ -605,15 +605,15 @@ def test_ivfpq_all_cells_equals_pq(spark):
     import pyspark.sql.functions as F
 
     from calaspark.ops.ann_pq import ivfpq_topk, load_or_build_ivfpq, pq_topk
-    from calaspark.queries.demos import _ivf_index_path, _pq_corpus_key
-    from calaspark.tables import load_table
+    from calaspark.queries.demos import _ivf_index_path
+    from calaspark.tables import load_table, table_path
 
     sf = "/root/testdata/sf0.001"
     e = load_table(spark, sf, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
     )
     model, cc, cents = load_or_build_ivfpq(
-        e, _pq_corpus_key(sf), _ivf_index_path(sf)
+        e, table_path(sf, "embeddings"), _ivf_index_path(sf)
     )
     q = np.asarray(
         e.filter(F.col("vec_id") == 0).collect()[0]["e"], dtype="float64"

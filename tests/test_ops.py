@@ -4,6 +4,8 @@ ops were dead code; now they are load-bearing and tested)."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 
 from calaspark.ops.text import (
@@ -1548,19 +1550,135 @@ def test_bpe_encode_compose_train(spark):
     assert got["newest"] == ["n", "e", "w", "e", "s", "t"]
 
 
-def test_evict_dead_sessions_drops_only_dead_apps():
-    """The shared memo hygiene rule (round-12 advice generalized):
-    entries led by a dead applicationId go, everything belonging to
-    the live session stays — regardless of the rest of the key."""
-    from calaspark.ops.materialize import evict_dead_sessions
+def test_session_memo_hits_misses_and_eviction(tmp_path, monkeypatch):
+    """calaspark.memo.session_memo, with no Spark: a hit returns the
+    stored object without building (falsy values included); a miss
+    evicts dead-application entries and entries superseded by a
+    rewrite of their source, and leaves other params' entries alone."""
+    from types import SimpleNamespace
 
-    memo = {
-        ("app-old", "corpus-a"): 1,
-        ("app-old", "corpus-b", "x"): 2,
-        ("app-live", "corpus-a"): 3,
+    from calaspark import memo
+
+    monkeypatch.setattr(memo, "_MEMO", {})
+    live, old = (
+        SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app))
+        for app in ("app-live", "app-old")
+    )
+    builds = []
+
+    def build(value):
+        def run():
+            builds.append(value)
+            return value
+
+        return run
+
+    memo.session_memo(old, "k", 1, build("dead"))
+    obj = object()
+    assert memo.session_memo(live, "k", 1, build(obj)) is obj
+    assert all(k[0] == "app-live" for k in memo._MEMO)
+    assert memo.session_memo(live, "k", 1, build(object())) is obj
+    for falsy in (False, None):
+        assert memo.session_memo(live, "falsy", falsy, build(falsy)) is falsy
+        assert memo.session_memo(live, "falsy", falsy, build(True)) is falsy
+    assert builds == ["dead", obj, False, None] and len(memo._MEMO) == 3
+
+    src = tmp_path / "corpus.parquet"
+    src.write_bytes(b"v1")
+    srcs = (str(src),)
+    memo.session_memo(live, "src", "a", build("a1"), srcs)
+    memo.session_memo(live, "src", "b", build("b1"), srcs)
+    os.utime(src, ns=(1, 1))  # a rewrite: new stat, same path
+    assert memo.session_memo(live, "src", "a", build("a2"), srcs) == "a2"
+    src_vals = sorted(v for k, v in memo._MEMO.items() if k[1] == "src")
+    assert src_vals == ["a2", "b1"]
+
+
+def test_no_module_global_memo_outside_session_memo():
+    """Every session memo goes through calaspark.memo: no calaspark
+    module binds another module-level dict to an upper-case private
+    name (the rule a tracer uses to find memos) beyond the constant
+    tables listed here."""
+    import importlib
+    import pkgutil
+    import sys
+
+    import calaspark
+
+    for m in pkgutil.walk_packages(calaspark.__path__, "calaspark."):
+        importlib.import_module(m.name)
+    found = {
+        f"{name}.{attr}"
+        for name, mod in list(sys.modules.items())
+        if name.startswith("calaspark") and mod is not None
+        for attr, val in vars(mod).items()
+        if isinstance(val, dict) and attr.startswith("_") and attr.lstrip("_").isupper()
     }
-    evict_dead_sessions(memo, "app-live")
-    assert memo == {("app-live", "corpus-a"): 3}
+    assert found == {
+        "calaspark.memo._MEMO",
+        "calaspark.tables._NANOS_TS_COLS",
+        "calaspark.ops.rangejoin._EPOCH",
+    }
+
+
+def test_bitmask_encode_dictionary_keyed_on_max_vocab(spark):
+    """A memoized dictionary built under one vocabulary cap is not
+    reused by a caller with a smaller cap: the second call must fall
+    back (None), not encode past its own cap."""
+    from calaspark.ops.lsh import bitmask_encode
+
+    t = spark.createDataFrame(
+        [(1, ["a", "b", "c"]), (2, ["c", "d", "e"])], "doc_id: long, toks: array<string>"
+    )
+    key = ("test-max-vocab", ())
+    assert bitmask_encode(t, max_vocab=512, dict_key=key) is not None
+    assert bitmask_encode(t, max_vocab=4, dict_key=key) is None
+
+
+def test_semdedup_centroids_retrain_after_embeddings_rewrite(spark, tmp_path, monkeypatch):
+    """semdedup_clusters' quantizer is keyed on the embeddings file's
+    stat: rewriting the file in the same session retrains it instead
+    of reusing centroids of the old vectors. Build only, with training
+    and the dedup stage stubbed: the key is under test, not the jobs."""
+    import math
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from calaspark.ops import ann_ivf, semdedup
+    from calaspark.queries.demos import semdedup_clusters
+
+    def write(phase: float) -> None:
+        vecs = [[math.sin(phase * i + j) for j in range(64)] for i in range(200)]
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array(range(200), pa.int64()),
+                    "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                }
+            ),
+            tmp_path / "embeddings.parquet",
+        )
+
+    calls = []
+    monkeypatch.setattr(
+        ann_ivf,
+        "train_ivf_centroids",
+        lambda *a, **kw: calls.append(1) or np.zeros((16, 64)),
+    )
+    monkeypatch.setattr(
+        semdedup,
+        "semdedup",
+        lambda corpus, **kw: corpus.select(
+            F.lit(0).alias("cell"), F.lit(1).alias("is_canonical")
+        ),
+    )
+    write(0.7)
+    semdedup_clusters(spark, str(tmp_path))
+    write(1.3)
+    semdedup_clusters(spark, str(tmp_path))
+    assert len(calls) == 2
 
 
 def test_prefix_match_join_equals_naive(spark):
